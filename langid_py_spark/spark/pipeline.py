@@ -1,7 +1,7 @@
 """The flagship quality-filter pipeline (BASELINE.json::north_rule).
 
-One job, ONE semantic shuffle (plus an optional output-shaping exchange
-in the write path — `run_pipeline(write_tasks=...)`):
+One job, ONE semantic shuffle (plus the adaptive rebalance that sizes
+the write tasks — see run_pipeline):
 
   scan(transcripts)                         # column-pruned parquet/Iceberg
    └─ classify_batch (Arrow UDF)            # shuffle-free map
@@ -11,9 +11,10 @@ in the write path — `run_pipeline(write_tasks=...)`):
    └─ two-stage SALTED conv-language vote   # THE shuffle (skew-safe)
    └─ backjoin conv_lang to turns           # AQE picks broadcast at small
                                             # conv counts, sort-merge at scale
-   └─ write partitioned by lang_bucket, sortWithinPartitions(conv_id,
-      turn_idx), dynamic partition overwrite + completion manifest
-      (resumable: completed buckets are never rewritten)
+   └─ rebalance(lang_bucket)                # AQE sizes the write tasks
+   └─ write partitioned by lang_bucket, sortWithinPartitions(lang_bucket,
+      conv_id, turn_idx), dynamic partition overwrite + completion
+      manifest (resumable: completed buckets are never rewritten)
 
 Reference parity: the per-turn (lang, conf) reproduces
 langid/langid.py::classify exactly (scorer.py); everything else is the
@@ -26,6 +27,7 @@ import json
 import os
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -111,6 +113,13 @@ def full_pipeline(
     ).select(*OUTPUT_COLUMNS)
 
 
+# one row per lang_bucket in the _metrics table (and manifest["metrics"])
+_METRICS_SCHEMA = pa.schema(
+    [("lang_bucket", pa.int32())]
+    + [(k, pa.int64()) for k in ("n_turns", "n_kept", "n_convs", "total_bytes")]
+)
+
+
 # ------------------------------------------------------------ resumable IO
 def _manifest_path(out_path: str) -> Path:
     return Path(out_path) / "_manifest.json"
@@ -133,19 +142,15 @@ def run_pipeline(
     sink_format: str = "parquet",
     sink_options: dict | None = None,
     sink_table: str | None = None,
-    write_tasks: int | None = 4 * C.LANG_BUCKETS,
 ) -> dict:
     """Execute + write, resumable per language bucket.
 
-    `write_tasks` shapes the output: one exchange partitions the final
-    rows by (lang_bucket, pmod(hash(conv_id), write_tasks/LANG_BUCKETS))
-    so the write emits exactly one file per non-empty combination
-    instead of tasks x buckets files. Measured at sf0.1 local[32]: warm
-    write stage 5.4-7.7 s -> 3.2-3.4 s and 182 -> 27 files — the
-    commit overhead of small files costs more than the extra exchange.
-    At cluster scale this is the file-count knob (size it to
-    executors x a few); pass None to skip the exchange entirely (the
-    vote agg remains the only shuffle).
+    The final rows pass through a rebalance on lang_bucket, so AQE sizes
+    the write tasks from the measured shuffle size: one file per
+    non-empty bucket while a bucket fits in
+    `spark.sql.adaptive.advisoryPartitionSizeInBytes` (Spark's own
+    setting), and a big bucket split into files of about that size.
+    Within each file rows are sorted by (conv_id, turn_idx).
 
     On resume, already-completed buckets are excluded from the write
     (their files are never touched — FIXTURES.md invariant 3); dynamic
@@ -204,7 +209,7 @@ def run_pipeline(
     try:
         return _run_pipeline_writes(
             spark, scored, in_path, out_path, manifest, done, todo,
-            sink_format, sink_options, sink_table, write_tasks,
+            sink_format, sink_options, sink_table,
         )
     finally:
         # release the cache entry even on the raising paths (missing
@@ -224,7 +229,6 @@ def _run_pipeline_writes(
     sink_format: str,
     sink_options: dict | None,
     sink_table: str | None,
-    write_tasks: int | None,
 ) -> dict:
     conv = conversation_vote(scored).select("conv_id", "conv_lang")
     result = (
@@ -235,19 +239,12 @@ def _run_pipeline_writes(
     if done:
         result = result.filter(F.col("lang_bucket").isin(todo))
 
-    # Output-shaping exchange (see run_pipeline docstring): without it
-    # each of the N upstream tasks emits up to LANG_BUCKETS files and
-    # file-commit overhead dominates; with it the write emits one
-    # conv-sorted file per (bucket, conv-subsplit). The vote agg remains
-    # the job's only SEMANTIC shuffle; this one is IO shaping and is
-    # skippable (write_tasks=None).
-    if write_tasks:
-        sub = max(1, write_tasks // C.LANG_BUCKETS)
-        result = result.repartition(
-            write_tasks,
-            F.col("lang_bucket"),
-            F.pmod(F.hash(F.col("conv_id")), F.lit(sub)),
-        )
+    # Output-shaping rebalance: without it each upstream task emits up
+    # to LANG_BUCKETS small files and file-commit overhead dominates.
+    # AQE picks the task count from the shuffle statistics, so the file
+    # count follows the data instead of a fixed knob. The vote agg
+    # remains the job's only SEMANTIC shuffle.
+    result = result.hint("rebalance", "lang_bucket")
 
     # observe() rides the write job for free (A7 pipeline metrics).
     from pyspark.sql import Observation
@@ -275,7 +272,11 @@ def _run_pipeline_writes(
                 f"b{b}_total_bytes"
             ),
         ]
-    to_write = result.observe(obs, *aggs).sortWithinPartitions("conv_id", "turn_idx")
+    # lang_bucket leads the sort: the planned write requires that order
+    # for partitionBy, and would otherwise replace this sort with its own
+    to_write = result.observe(obs, *aggs).sortWithinPartitions(
+        "lang_bucket", "conv_id", "turn_idx"
+    )
     if sink_format == "iceberg":
         if not sink_table:
             raise ValueError("sink_format='iceberg' requires sink_table")
@@ -304,22 +305,18 @@ def _run_pipeline_writes(
     # manifest; rewriting them from this run's filtered plan would zero
     # them out)
     mrows = {
-        str(b): {
-            k: int(observed[f"b{b}_{k}"] or 0)
-            for k in ("n_turns", "n_kept", "n_convs", "total_bytes")
-        }
+        str(b): {k: int(observed[f"b{b}_{k}"] or 0) for k in _METRICS_SCHEMA.names[1:]}
         for b in todo
     }
     manifest["metrics"].update(mrows)
     # the _metrics table mirrors the FULL manifest map (all completed
-    # buckets, incl. prior runs) — a tiny driver-built frame, no extra
-    # pass over the data
+    # buckets, incl. prior runs) — a tiny driver-built Arrow table, which
+    # plans as a LocalTableScan: no pass over the data, no Python workers
     metrics = spark.createDataFrame(
-        [
-            (int(b), int(m["n_turns"]), int(m["n_kept"]), int(m["n_convs"]), int(m["total_bytes"]))
-            for b, m in sorted(manifest["metrics"].items(), key=lambda kv: int(kv[0]))
-        ],
-        "lang_bucket int, n_turns long, n_kept long, n_convs long, total_bytes long",
+        pa.Table.from_pylist(
+            [{"lang_bucket": int(b), **m} for b, m in manifest["metrics"].items()],
+            schema=_METRICS_SCHEMA,
+        ).sort_by("lang_bucket")
     )
     if sink_format == "iceberg":
         metrics.writeTo(f"{sink_table}_metrics").using("iceberg").createOrReplace()

@@ -70,14 +70,20 @@ def run_stream_to_parquet(
     backfill job, which shares all code)."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        conv = conversation_vote(batch_df).select("conv_id", "conv_lang")
-        (
-            batch_df.join(conv, "conv_id", "left")
-            .write.mode("append")
-            .parquet(out_path)
-        )
+        # isEmpty, the vote and the join each read batch_df: persist so
+        # the scorer runs once per row, not three times
+        batch_df.persist()
+        try:
+            if batch_df.isEmpty():
+                return
+            conv = conversation_vote(batch_df).select("conv_id", "conv_lang")
+            (
+                batch_df.join(conv, "conv_id", "left")
+                .write.mode("append")
+                .parquet(out_path)
+            )
+        finally:
+            batch_df.unpersist()
 
     scored = score_turns(read_transcript_stream(spark, in_path))
     writer = (

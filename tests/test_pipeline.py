@@ -147,13 +147,25 @@ def test_resume_skips_completed_buckets(spark, fixture_path, tmp_path):
 
 
 def test_output_sorted_within_partitions(spark, fixture_path, tmp_path):
+    """Every output file is sorted by (conv_id, turn_idx), and at fixture
+    scale the rebalance writes one file per non-empty bucket. The input is
+    split into several files so the final shuffle has several map outputs
+    to interleave. The driver-built _metrics table keeps its schema."""
+    src = str(tmp_path / "split_src")
+    spark.read.parquet(fixture_path).repartition(4).write.parquet(src)
+    assert len(list(Path(src).glob("*.parquet"))) >= 4
     out = str(tmp_path / "sorted")
-    run_pipeline(spark, fixture_path, out)
-    files = list(Path(out).glob("lang_bucket=*/*.parquet"))
-    assert files
-    for f in files[:4]:
-        pdf = pd.read_parquet(f)[["conv_id", "turn_idx"]]
+    run_pipeline(spark, src, out)
+    dirs = list(Path(out).glob("lang_bucket=*"))
+    assert dirs
+    for d in dirs:
+        files = list(d.glob("*.parquet"))
+        assert len(files) == 1, f"{d.name}: {len(files)} data files"
+        pdf = pd.read_parquet(files[0])[["conv_id", "turn_idx"]]
         assert pdf.equals(pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True))
+    assert spark.read.parquet(f"{out}/_metrics").schema.simpleString() == (
+        "struct<lang_bucket:int,n_turns:bigint,n_kept:bigint,n_convs:bigint,total_bytes:bigint>"
+    )
 
 
 def test_sink_format_orc(spark, fixture_path, tmp_path):
